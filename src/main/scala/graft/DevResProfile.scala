@@ -109,13 +109,8 @@ object DevResProfile {
             col("cell") === col("q_cell") && col("vec_id") =!= col("query_id"))
           .withColumn("cos_r", round((term0 +: luts).reduce(_ + _), 6))
         import org.apache.spark.sql.expressions.Window
-        val wLocal = Window.partitionBy(col("query_id"), col("scan_pid"))
-          .orderBy(desc("cos_r"), col("vec_id"))
         val w = Window.partitionBy(col("query_id")).orderBy(desc("cos_r"), col("vec_id"))
         scored.select(col("query_id"), col("vec_id"), col("cos_r"))
-          .withColumn("scan_pid", spark_partition_id())
-          .withColumn("lr", row_number().over(wLocal))
-          .filter(col("lr") <= 10)
           .withColumn("rank", row_number().over(w).cast("long"))
           .filter(col("rank") <= 10)
           .queryExecution.toRdd.count()

@@ -72,8 +72,7 @@ case class NearestCells(left: Expression, right: Expression,
     extends BinaryExpression {
 
   // precomputed per-centroid norms (host-side constants)
-  private val cnorms: Array[Double] =
-    centroids.map(c => math.sqrt(c.map(x => x * x).sum))
+  private val cnorms: Array[Double] = NearestCells.norms(centroids)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_cells"
@@ -94,6 +93,10 @@ case class NearestCells(left: Expression, right: Expression,
 }
 
 object NearestCells {
+  /** The per-centroid norms [[run]] takes. */
+  def norms(cents: Array[Array[Double]]): Array[Double] =
+    cents.map(c => math.sqrt(c.map(x => x * x).sum))
+
   def run(v: ArrayData, nrm: Double, cents: Array[Array[Double]],
           cnorms: Array[Double], k: Int): ArrayData = {
     val m = cents.length

@@ -36,11 +36,13 @@ object TextAnalysis {
     "zh" -> Seq("hash", "scan"))
 
   /** doc_id (+ any carried columns) exploded to one row per token —
-    * higher-order array functions (`filter`/`array_distinct` lambdas) are
-    * NOT codegen'd in Spark, so token statistics are computed as exploded
-    * aggregations instead: hash-agg with map-side combine, whole-stage
-    * codegen throughout, and the shape that scales (token rows never
-    * carry the document text).
+    * higher-order array functions (lambdas such as `filter`) are
+    * interpreted, not codegen'd, in Spark, so per-token statistics are
+    * computed as exploded aggregations instead: hash-agg with map-side
+    * combine, whole-stage codegen throughout, and the shape that scales
+    * (token rows never carry the document text). `array_distinct` is a
+    * plain builtin, not a lambda: a per-doc distinct count needs no
+    * explode (the curation gates compute it in the row).
     */
   private def tokenRows(documents: DataFrame, carry: Column*): DataFrame =
     documents.select(col("doc_id") +: carry :+ explode(toks).as("tok"): _*)

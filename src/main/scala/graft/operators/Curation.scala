@@ -415,14 +415,16 @@ object Curation {
   /** Global-quantile quality gate — "keep the top `keepBps`/10000 of the
     * corpus by quality score", the relative form of a quality filter (an
     * absolute threshold drifts as the corpus mix changes; a quantile
-    * doesn't). Score = type-token ratio in basis points (`ttr_bp` from
-    * [[graft.functions.TextAnalysis.qualityScore]]); the kept set is
+    * doesn't). Score = type-token ratio in basis points ([[ttrScored]],
+    * the `ttr_bp` of [[graft.functions.TextAnalysis.qualityScore]]); a
+    * null-text doc has no score and is never kept. The kept set is
     * `score >= T*` where `T*` is the highest score whose cumulative count
     * reaches `⌈n·keepBps/10000⌉` — the whole tie class at the boundary
     * stays in, so membership is a pure function of a doc's score
     * (deterministic, engine-portable, no per-doc global rank).
     *
-    * Scale shape: the threshold comes from a score HISTOGRAM — one
+    * Scale shape: the score is row-local (map-only, no token shuffle).
+    * The threshold comes from a score HISTOGRAM — one
     * partial-aggregated groupBy over scores, then a cumulative window over
     * the distinct-score frame, which is bounded by the score domain
     * (`ttr_bp` ∈ [0, 10000]) rather than the corpus, so the
@@ -436,11 +438,10 @@ object Curation {
     require(keepBps > 0 && keepBps <= 10000, "keepBps must be in (0, 10000]")
     // materialize the (doc_id, ttr_bp) score frame once: the eager
     // threshold probe and the returned filter both consume it, and left
-    // lazy the whole upstream plan — the token-level quality scoring
-    // plus whatever gates the caller composed underneath (the pipeline
-    // entries feed this from a source-reputation join) — executed twice
-    // (guide §1.2). Bounded: two longs per doc.
-    val scored = graft.functions.TextAnalysis.qualityScore(documents)
+    // lazy the whole upstream plan — whatever gates the caller composed
+    // underneath (the pipeline entries feed this from a source-reputation
+    // join) — executed twice (guide §1.2). Bounded: two longs per doc.
+    val scored = ttrScored(documents, col("doc_id"))
       .select(col("doc_id"), col("ttr_bp")).localCheckpoint()
     val hist = scored.groupBy(col("ttr_bp")).agg(count(lit(1)).as("cnt"))
     val cumW = Window.orderBy(col("ttr_bp").desc)
@@ -997,6 +998,22 @@ object Curation {
       .orderBy(col("doc_id"))
   }
 
+  /** `carry` plus `n_tokens` and `ttr_bp`, the type-token ratio of the
+    * space-split text in basis points (round-half-up integer math), for
+    * every doc with non-null text. Row-local: `array_distinct` is a
+    * plain builtin expression, not a lambda, so the distinct count needs
+    * no exploded token aggregation. A null-text doc has no score and gets
+    * no row.
+    */
+  private def ttrScored(documents: DataFrame, carry: Column*): DataFrame = {
+    val toks = split(col("text"), " ")
+    documents.filter(col("text").isNotNull)
+      .select(carry :+ size(toks).cast("long").as("n_tokens") :+
+        size(array_distinct(toks)).cast("long").as("n_distinct"): _*)
+      .withColumn("ttr_bp",
+        expr("(n_distinct * 20000 + n_tokens) div (2 * n_tokens)"))
+  }
+
   /** Per-source (domain-level) reputation table: document count, exact
     * duplicate rate, mean length, and mean type-token-ratio quality per
     * `source` — the statistics behind domain-level curation (a web corpus
@@ -1004,31 +1021,17 @@ object Curation {
     * because a spam domain's documents are individually plausible but
     * collectively near-identical). All integer math, round-half-up.
     *
-    * Scale shape: the token shuffle carries ONLY (doc_id, tok) — the
-    * per-doc distinct count is two fixed-width hash aggregations (the
-    * skew-safe [[graft.functions.TextAnalysis.tokenDocFrequency]] shape),
-    * then joins the map-only per-doc frame on `doc_id`. Routing `source`
-    * / `text_key` through the exploded aggregation instead (max(string)
-    * buffers) demotes the whole token path to SortAggregate — this shape
-    * keeps every stage a hash aggregation and never sorts the token
-    * explosion (plan-verified at 500k docs; `DevScale`).
-    * The final groupBy on `source` is domain-dimension-sized; its
+    * Scale shape: the per-doc scores are row-local ([[ttrScored]]), so
+    * the only shuffle is the groupBy on `source`, which is
+    * domain-dimension-sized; its
     * distinct-text count expands to (source, text_key) keys first, so a
     * hot domain splits across partitions in the partial stage rather
     * than funneling through one reducer.
     */
   def sourceReputation(documents: DataFrame): DataFrame = {
-    val nDistinct = documents
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .distinct()
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_distinct"))
-    val perDoc = documents
-      .select(col("doc_id"), col("source"), md5(col("text")).as("text_key"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .join(nDistinct, "doc_id")
-      .select(col("source"), col("text_key"), col("n_tokens"),
-        expr("(n_distinct * 20000 + n_tokens) div (2 * n_tokens)").as("ttr_bp"))
-    perDoc
+    // a null-id doc gets no reputation row, like a null-text one
+    ttrScored(documents.filter(col("doc_id").isNotNull), col("source"),
+        md5(col("text")).as("text_key"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("text_key")).as("n_unique_texts"),

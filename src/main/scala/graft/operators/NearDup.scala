@@ -244,8 +244,15 @@ object NearDup {
   /** Connected-component labeling over an already-verified near-dup pair
     * set — the label-table build an incremental pipeline runs against
     * yesterday's pair table without re-running candidate generation.
+    *
+    * Min-label propagation to a fixpoint: each node ends with its
+    * component's minimum id. The labels start from one edge aggregate,
+    * `least(id, min(neighbour))` — what a first round over id-labelled
+    * nodes computes, without the `distinct` id pass and its join — and
+    * that seed counts as the first of the `maxIters` rounds.
     */
   def clustersFromPairs(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
+    require(maxIters >= 1, "maxIters must be at least 1")
     val p = pairs.select(col("doc_i"), col("doc_j")).localCheckpoint()
     // scale-aware partitioning: a tiny near-dup graph collapses to one
     // task per round (stage round-trips dominate ~50-row frames); a
@@ -255,10 +262,15 @@ object NearDup {
     val parts = partsFor(p.count() * 2)
     val edges = p.union(p.select(col("doc_j").as("doc_i"), col("doc_i").as("doc_j")))
       .coalesce(parts).localCheckpoint()
-    var labels = edges.select(col("doc_i").as("id")).distinct()
-      .withColumn("label", col("id")).coalesce(parts).localCheckpoint()
-    var converged = false
-    var iter = 0
+    val seeded = edges.groupBy(col("doc_i").as("id"))
+      .agg(min(col("doc_j")).as("m"))
+      // a null id joins no neighbour, so it keeps a null label
+      .select(col("id"), when(col("id").isNotNull, least(col("id"), col("m")))
+        .as("label"), (col("m") < col("id")).as("changed"))
+      .coalesce(parts).localCheckpoint()
+    var converged = seeded.filter(col("changed")).isEmpty
+    var labels = seeded.select(col("id"), col("label"))
+    var iter = 1
     while (!converged && iter < maxIters) {
       val neighborMin = edges
         .join(labels, edges("doc_j") === labels("id"))

@@ -60,20 +60,19 @@ object Similarity {
     * keep the top `k` — one copy of the ordering contract the
     * [[annRecallReport]] comparison depends on all three methods sharing.
     *
-    * Two-level ranking (the [[graft.operators.Curation.stratifiedSample]]
-    * pattern): a single `partitionBy(query_id)` window would drag the
+    * Scale shape: a plain `partitionBy(query_id)` window would drag the
     * whole scored frame — corpus × queries rows for the brute/PQ scans —
     * through |queries| reducers (measured: the 20-partition sort WAS the
-    * PQ-at-500k wall clock, not the ADC math). Level 1 ranks inside
-    * (query, input-partition) — full parallelism, and any row in a
-    * query's global top-k is trivially in its partition's top-k under
-    * the same total order, so the prune is exact; level 2 ranks the
-    * ≤ partitions × k survivors per query — a bounded frame at any
-    * corpus size.
+    * PQ-at-500k wall clock, not the ADC math). It does not, because the
+    * `rank <= k` filter over `row_number` plans as a `WindowGroupLimit`
+    * whose partial half runs map-side, below the `query_id` exchange:
+    * each input partition keeps its own top `k` per query, which is exact
+    * (any row in a query's global top-k is in its partition's top-k under
+    * the same total order), and the exchange moves ≤ partitions × k rows
+    * per query — no explicit per-partition ranking window is needed,
+    * and one would cost a whole extra hash exchange.
     */
   private def presentTopK(scored: DataFrame, k: Int): DataFrame = {
-    val wLocal = Window.partitionBy(col("query_id"), col("scan_pid"))
-      .orderBy(desc("cos_r"), col("vec_id"))
     val w = Window.partitionBy(col("query_id")).orderBy(desc("cos_r"), col("vec_id"))
     scored
       // project FIRST: the ranking sort must move 3 columns per candidate,
@@ -81,9 +80,6 @@ object Similarity {
       // arrays — measured at 500k: sorting full-width rows WAS the scan's
       // wall clock, 10M × ~hundreds of doubles through spill)
       .select(col("query_id"), col("vec_id"), col("cos_r"))
-      .withColumn("scan_pid", spark_partition_id())
-      .withColumn("lr", row_number().over(wLocal))
-      .filter(col("lr") <= k)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
@@ -514,15 +510,19 @@ object Similarity {
     * where double sums are not, so the trained centroids — and therefore
     * assignments and recall — are bit-identical across runs, partitionings
     * and cluster sizes; the 2^-20 quantization is noise relative to
-    * quantizer quality. Per-iteration driver traffic is `cells × dim`
-    * aggregated rows (bounded constants, like the centroid collect
-    * itself); everything row-proportional is a map pass plus one
-    * partial-aggregated shuffle.
+    * quantizer quality.
+    *
+    * Scale shape: each iteration is ONE `treeAggregate` over the prepared
+    * rows — per partition, the nearest cell and the fixed-point sums of
+    * every vector fold into a `cells × (dim + 1)` long array, and the
+    * arrays merge by element-wise addition. No shuffle and one Spark job
+    * per iteration; driver traffic is the bounded array (like the
+    * centroid collect itself), never row-proportional. A row with a null
+    * vector or norm has no cell and takes no part in training.
     */
   private[graft] def kmeansCentroids(prep: DataFrame, cells: Int,
                                      iters: Int,
                                      portableSeed: Boolean = false): Seq[Seq[Double]] = {
-    val spark = prep.sparkSession
     val Scale = 1L << 20
     // portableSeed picks the seed vectors by md5-of-id order instead of
     // xxhash64 — same pseudo-random-without-RNG-state property, but md5
@@ -531,38 +531,49 @@ object Similarity {
     val seedOrd =
       if (portableSeed) md5(col("vec_id").cast("string"))
       else xxhash64(col("vec_id"))
-    var centroids: Array[Array[Double]] = prep
+    val train = prep.filter(col("v").isNotNull && col("nrm").isNotNull)
+    var centroids: Array[Array[Double]] = train
       .orderBy(seedOrd, col("vec_id"))
       .limit(cells)
       .select(col("v"))
       .collect()
       .map(_.getAs[scala.collection.Seq[Double]](0).toArray)
     val dim = if (centroids.nonEmpty) centroids(0).length else 0
+    val width = dim + 1 // per cell: the count, then `dim` fixed-point sums
+    val rows = train.select(col("v"), col("nrm")).queryExecution.toRdd
     var it = 0
     while (it < iters) {
-      // one aggregate pass with `dim` fixed-point sums per cell (the
-      // per-cell-mean shape): map-side combine reduces straight to
-      // `cells` rows. The former posexplode spelling materialized
-      // corpus × dim rows per iteration AND sent every element through
-      // round()'s per-value BigDecimal (measured at 10M × 64: the three
-      // Lloyd updates were 521 s of the residual chain — the dominant
-      // cost of every IVF operator at that scale); identical long sums,
-      // so the trained centroids are bit-equal.
-      val sumCols = count(lit(1)).as("n") +: (0 until dim).map(i =>
-        sum(ArrayOps.roundScaledLong(spark,
-          element_at(col("v"), i + 1), Scale)).as(s"sx$i"))
-      val sums = prep
-        .withColumn("cell", element_at(ArrayOps.nearestCells(spark,
-          col("v"), col("nrm"), centroids.map(_.toSeq).toSeq, 1), 1))
-        .groupBy(col("cell"))
-        .agg(sumCols.head, sumCols.tail: _*)
-        .collect()
-      val next = centroids.map(_.clone()) // empty cells keep their centroid
-      sums.foreach { r =>
-        val cell = r.getInt(0)
-        val n = r.getLong(1)
-        (0 until dim).foreach { i =>
-          next(cell)(i) = r.getLong(2 + i).toDouble / (n.toDouble * Scale)
+      // the NearestCells / RoundScaledLong arithmetic of the SQL
+      // assignment path, folded per partition: long sums do not depend
+      // on order, so the centroids do not depend on the partitioning
+      val cents = centroids
+      val cnorms = graft.functions.NearestCells.norms(cents)
+      val sums = rows.treeAggregate(new Array[Long](cents.length * width))(
+        (acc, r) => {
+          val v = r.getArray(0)
+          val base = graft.functions.NearestCells
+            .run(v, r.getDouble(1), cents, cnorms, 1).getInt(0) * width
+          acc(base) += 1
+          var i = 0
+          val n = math.min(dim, v.numElements())
+          while (i < n) {
+            if (!v.isNullAt(i)) {
+              acc(base + 1 + i) += graft.functions.RoundScaledLong.run(v.getDouble(i), Scale)
+            }
+            i += 1
+          }
+          acc
+        },
+        (a, b) => {
+          var i = 0
+          while (i < a.length) { a(i) += b(i); i += 1 }
+          a
+        })
+      val next = cents.map(_.clone()) // empty cells keep their centroid
+      cents.indices.foreach { cell =>
+        val n = sums(cell * width)
+        if (n > 0) (0 until dim).foreach { i =>
+          next(cell)(i) = sums(cell * width + 1 + i).toDouble / (n.toDouble * Scale)
         }
       }
       centroids = next
@@ -641,10 +652,12 @@ object Similarity {
     * cell ids are seed-order ranks (0-based).
     *
     * Scale shape: identical to the IVF build — per-iteration work is one
-    * map pass (a codegen'd `cells × dim` dot-product loop per row) plus
-    * one partially-aggregated `(cell, pos)` shuffle of fixed-point longs;
+    * shuffle-free `treeAggregate` (the [[graft.functions.NearestCells]]
+    * `cells × dim` dot-product loop per row, folded into fixed-point
+    * long sums);
     * driver traffic is the bounded `cells × dim` centroid matrix per
-    * iteration, never row-proportional.
+    * iteration, never row-proportional. A null vector takes no part in
+    * training and lands in a null cell.
     */
   def clusterEmbeddings(embeddings: DataFrame, cells: Int = IvfCells,
                         iters: Int = IvfKmeansIters): DataFrame = {
@@ -672,7 +685,8 @@ object Similarity {
     * training, assignment, AND the per-cell pick.
     *
     * Scale shape: training/assignment are [[clusterEmbeddings]]'s (map
-    * passes + a `(cell, pos)` fixed-point shuffle); the per-cell pick is
+    * passes + one shuffle-free fixed-point `treeAggregate` per
+    * iteration); the per-cell pick is
     * the stratified sampler's two-level rank — level 1 inside
     * `(cell, bucket-range)` sub-strata (exact by the prefix property),
     * level 2 over ≤ `subStrata × perCell` survivors per cell — so no

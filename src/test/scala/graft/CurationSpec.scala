@@ -492,6 +492,82 @@ class CurationSpec extends SparkSpec {
       assert(n == inputBySrc(src), s"source $src partially dropped") }
   }
 
+  test("row-local gate scores equal the exploded-token spelling on degenerate texts") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    // the sf0.001 corpus plus one doc of each degenerate text shape:
+    // null, empty, double spaces, a single token, repeated tokens
+    val edge = Seq(
+      (9001L, null: String, "edge.a"), (9002L, "", "edge.a"),
+      (9003L, "a  b", "edge.a"), (9004L, "solo", "edge.b"),
+      (9005L, "x x y x", "edge.b"), (9006L, "y  y ", "edge.b"),
+      (9007L, null: String, "edge.c"))
+      .toDF("doc_id", "text", "source")
+    val corpus = docs.select("doc_id", "text", "source").union(edge)
+    // the reference spelling: the distinct count is an exploded
+    // (doc_id, tok) distinct joined back on doc_id
+    def explodedReputation(d: DataFrame): DataFrame = {
+      val nDistinct = d
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+        .distinct()
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_distinct"))
+      d.select(col("doc_id"), col("source"), md5(col("text")).as("text_key"),
+          size(split(col("text"), " ")).cast("long").as("n_tokens"))
+        .join(nDistinct, "doc_id")
+        .select(col("source"), col("text_key"), col("n_tokens"),
+          expr("(n_distinct * 20000 + n_tokens) div (2 * n_tokens)").as("ttr_bp"))
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          countDistinct(col("text_key")).as("n_unique_texts"),
+          sum(col("n_tokens")).as("total_tokens"),
+          sum(col("ttr_bp")).as("sum_ttr"))
+        .select(col("source"), col("n_docs"), col("n_unique_texts"),
+          expr("((n_docs - n_unique_texts) * 20000 + n_docs) div (2 * n_docs)")
+            .as("dup_bp"),
+          expr("(total_tokens * 2 + n_docs) div (2 * n_docs)").as("avg_tokens"),
+          expr("(sum_ttr * 2 + n_docs) div (2 * n_docs)").as("avg_ttr_bp"))
+    }
+    def rows(d: DataFrame) = d.collect().map(_.toSeq).toSet
+    assert(rows(Curation.sourceReputation(corpus)) == rows(explodedReputation(corpus)))
+    // a null-text doc gets no reputation row: 501 docs count as 500
+    val oneNull = docs.select("doc_id", "text", "source")
+      .union(Seq((9001L, null: String, "edge.a")).toDF("doc_id", "text", "source"))
+    assert(Curation.sourceReputation(oneNull)
+      .agg(sum(col("n_docs"))).head.getLong(0) == 500L)
+
+    // gateBySource: the anti-join against the exploded reputation
+    for ((minTtr, maxDup) <- Seq((4800L, 2000L), (0L, 10000L), (9000L, 0L))) {
+      val bad = explodedReputation(corpus)
+        .filter(col("avg_ttr_bp") < minTtr || col("dup_bp") > maxDup)
+        .select(col("source").as("bad_source"))
+      val want = corpus.join(bad, col("source") <=> col("bad_source"), "left_anti")
+        .select(col("doc_id"), col("source"), length(col("text")).cast("long"))
+      assert(rows(Curation.gateBySource(corpus, minTtr, maxDup)) == rows(want),
+        s"gateBySource($minTtr, $maxDup)")
+    }
+
+    // qualityQuantileGate: the reference score is TextAnalysis.qualityScore's
+    // exploded ttr_bp; the kept set is every score >= the highest score
+    // whose docs at or above it reach keepBps of the scored docs
+    val scored = graft.functions.TextAnalysis.qualityScore(corpus)
+      .select(col("doc_id"), col("ttr_bp")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(!scored.exists(r => r._1 == 9001L || r._1 == 9007L))
+    for (keepBps <- Seq(2500, 7500, 10000)) {
+      val desc = scored.groupBy(_._2).map { case (bp, ds) => bp -> ds.size.toLong }
+        .toSeq.sortBy(-_._1)
+      val atOrAbove = desc.scanLeft(0L)(_ + _._2).tail
+      val thr = desc.map(_._1).zip(atOrAbove)
+        .collectFirst { case (bp, c) if c * 10000 >= scored.size * keepBps => bp }.get
+      val want = scored.filter(_._2 >= thr).sortBy(_._1)
+      val got = Curation.qualityQuantileGate(corpus, keepBps).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      assert(got == want, s"qualityQuantileGate($keepBps)")
+    }
+    // keep-all on the edge docs alone: every doc but the two null texts
+    assert(Curation.qualityQuantileGate(edge, 10000).count() == 5L)
+  }
+
   test("training-data pipeline: every survivor passes every stage, shards respect capacity") {
     val rows = SparkEntry.queries("pipeline_training_data")(
       spark, "/root/testdata/sf0.001").collect()

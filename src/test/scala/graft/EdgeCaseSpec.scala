@@ -65,6 +65,23 @@ class EdgeCaseSpec extends SparkSpec {
     assert(ivf.nonEmpty && ivf.forall(_.getLong(2) <= 10))
   }
 
+  test("a null embedding neither trains nor fails the k-means paths") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(col("vec_id"), col("embedding"))
+    val withNull = emb.union(
+      Seq((99999L, null: Seq[Float])).toDF("vec_id", "embedding"))
+    // training skips the null row, and neither top-k side scores it
+    def topK(e: org.apache.spark.sql.DataFrame) = Similarity.ivfTopK(e, 20, 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(topK(withNull) == topK(emb))
+    // the null vector lands in a null cell; every other cell is unchanged
+    def cells(e: org.apache.spark.sql.DataFrame) = Similarity.clusterEmbeddings(e)
+      .collect().map(r => (Option(r.get(0)), r.getLong(1), r.getLong(2))).toSeq
+    val (nullCell, trained) = cells(withNull).partition(_._1.isEmpty)
+    assert(trained == cells(emb))
+    assert(nullCell == Seq((None, 1L, 99999L)))
+  }
+
   test("corpus writer on an empty corpus returns an empty manifest, not a crash") {
     val out = java.nio.file.Files.createTempDirectory("edge_corpus_")
     try {

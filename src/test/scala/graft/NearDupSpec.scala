@@ -355,6 +355,21 @@ class NearDupSpec extends SparkSpec {
     assert(NearDup.clustersFromPairs(empty, maxIters = 1).collect().isEmpty)
   }
 
+  test("clustersFromPairs: the seeded labels count as the first round of the budget") {
+    import spark.implicits._
+    // the path 4-3-2-1 needs three min-label rounds and a fourth to see
+    // no change; 9-8 needs one and a second to see no change
+    val pairs = Seq((3L, 4L), (2L, 3L), (1L, 2L), (8L, 9L)).toDF("doc_i", "doc_j")
+    intercept[IllegalArgumentException](NearDup.clustersFromPairs(pairs, maxIters = 3))
+    assert(NearDup.clustersFromPairs(pairs, maxIters = 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (8L, 8L), (9L, 8L)))
+    // a self-pair changes nothing: the seed round already converged
+    val self = Seq((5L, 5L)).toDF("doc_i", "doc_j")
+    assert(NearDup.clustersFromPairs(self, maxIters = 1).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((5L, 5L)))
+  }
+
   test("incremental exact: planted copies, supplied-key parity, union equivalence") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

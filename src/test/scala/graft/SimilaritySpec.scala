@@ -317,6 +317,86 @@ class SimilaritySpec extends SparkSpec {
     assert(a == b, "centroids differ across partitionings")
   }
 
+  test("tree-aggregated k-means equals the groupBy/agg Lloyd update bit for bit") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.functions.ArrayOps
+    // the reference spelling of each Lloyd iteration: assign every
+    // vector's cell in SQL, one groupBy(cell) with a count and `dim`
+    // fixed-point sums, collected to the driver
+    def groupByLloyd(prep: DataFrame, cells: Int, iters: Int,
+                     portableSeed: Boolean): Seq[Seq[Double]] = {
+      val Scale = 1L << 20
+      val seedOrd =
+        if (portableSeed) md5(col("vec_id").cast("string"))
+        else xxhash64(col("vec_id"))
+      var cents = prep.orderBy(seedOrd, col("vec_id")).limit(cells)
+        .select(col("v")).collect()
+        .map(_.getAs[scala.collection.Seq[Double]](0).toArray)
+      val dim = cents(0).length
+      for (_ <- 0 until iters) {
+        val sumCols = count(lit(1)).as("n") +: (0 until dim).map(i =>
+          sum(ArrayOps.roundScaledLong(spark,
+            element_at(col("v"), i + 1), Scale)).as(s"sx$i"))
+        val sums = prep
+          .withColumn("cell", element_at(ArrayOps.nearestCells(spark,
+            col("v"), col("nrm"), cents.map(_.toSeq).toSeq, 1), 1))
+          .groupBy(col("cell"))
+          .agg(sumCols.head, sumCols.tail: _*)
+          .collect()
+        val next = cents.map(_.clone())
+        sums.foreach { r =>
+          val n = r.getLong(1)
+          (0 until dim).foreach { i =>
+            next(r.getInt(0))(i) = r.getLong(2 + i).toDouble / (n.toDouble * Scale)
+          }
+        }
+        cents = next
+      }
+      cents.map(_.toSeq).toSeq
+    }
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
+    def prep(df: DataFrame) = df
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("nrm", sqrt(ArrayOps.dotNative(spark, col("v"), col("v"))))
+    for (portable <- Seq(false, true); layout <- Seq(emb, emb.repartition(13))) {
+      val want = groupByLloyd(prep(layout), 16, 3, portable)
+      val got = Similarity.kmeansCentroids(prep(layout), 16, 3, portable)
+      assert(got == want, s"portableSeed=$portable, ${layout.rdd.getNumPartitions} partitions")
+    }
+  }
+
+  test("top-k ranking plans one hash exchange on query_id, map-side limited") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    for ((name, topK) <- Seq(
+        "ivf" -> Similarity.ivfTopK(emb, 20, 10),
+        "brute" -> Similarity.bruteForceTopK(emb, 20, 10))) {
+      topK.collect() // AQE settles the final plan on execution
+      val hashExchanges = nodes(topK.queryExecution.executedPlan).collect {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }
+      assert(hashExchanges.size == 1, s"$name: ${hashExchanges.size} hash exchanges")
+      val keys = hashExchanges.head.outputPartitioning
+        .asInstanceOf[HashPartitioning].expressions.flatMap(_.references.map(_.name))
+      assert(keys == Seq("query_id"), s"$name: exchange keyed on $keys")
+      assert(nodes(hashExchanges.head.child).exists {
+        case w: WindowGroupLimitExec => w.mode == Partial
+        case _ => false
+      }, s"$name: no partial WindowGroupLimit below the query_id exchange")
+    }
+  }
+
   test("clusterEmbeddings partitions the corpus exactly once, layout-invariant") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val out = Similarity.clusterEmbeddings(emb).collect()
